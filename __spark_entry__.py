@@ -287,10 +287,10 @@ def _q_bm25_topk(spark, sf_dir):
 
 
 def _q_bm25_index_topk(spark, sf_dir):
-    """BM25 top-10 through the FULL index engine: build a factored
-    SPIMI index (doc-sharded posting blocks storing the doc-local tf-part;
-    idf applied at query time from term_stats — index_build.IndexBuilder,
-    the weight_scheme='factored' default) from the documents table, query
+    """BM25 top-10 through the FULL index engine: build a SPIMI index
+    (doc-sharded posting blocks storing (tf, dl); the BM25 tf-part and idf
+    applied at query time from term_stats — index_build.IndexBuilder, the
+    weight_scheme='raw' default) from the documents table, query
     it with the auto-routed front-end (retrieve.topk → segment scorer).
 
     The index stores float32 factors, so for the hash-exact oracle compare

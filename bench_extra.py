@@ -3,7 +3,8 @@ for driver measurement; this file is the builder's own instrumentation).
 
 Times individual declared queries with the noop sink (guide §1.4), the same
 session construction and warm-up as bench.py's headline_queries, and prints
-one JSON line {name: seconds} (best of N repeats).
+one JSON line {name: seconds} (best of N repeats) plus every sample
+as {name}_samples.
 
 Usage:
   python bench_extra.py [--repeats N] [name ...]
@@ -63,13 +64,10 @@ def main() -> None:
     out = {}
     for name in names:
         if name == "zipf":
-            best = None
-            for _ in range(repeats):
-                t = _skew_demo(spark)
-                best = t if best is None else {
-                    k: min(best[k], t[k]) for k in t
-                }
-            out.update(best)
+            runs = [_skew_demo(spark) for _ in range(repeats)]
+            for k in runs[0]:
+                out[k] = min(t[k] for t in runs)
+                out[f"{k}_samples"] = [t[k] for t in runs]
             continue
         samples = []
         for _ in range(repeats):

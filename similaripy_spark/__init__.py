@@ -8,8 +8,10 @@ A from-scratch re-expression of the capabilities of ``bogliosimone/similaripy``
 * normalizations (l1/l2/max, tfidf, bm25, bm25plus) are aggregations + column
   expressions (reference: similaripy/cython_code/normalization.pyx);
 * the generalized top-k similarity kernel ``s_plus`` (reference:
-  similaripy/cython_code/s_plus.h:129-156) is join → hash-aggregate → scalar
-  expression → windowed top-k, fully inside Catalyst/Tungsten;
+  similaripy/cython_code/s_plus.h:71-240) is one row-partitioned Arrow
+  kernel: m2 ships as a broadcast CSR, each task accumulates its rows'
+  (row, col) cells, evaluates the s_plus.h:129-156 expression and keeps the
+  per-row top-k — no join, aggregate or window over the pair stream;
 * on top of that sits a fulltext stack: tokenizer → postings → BM25 weights →
   SPIMI-style compressed index segments → Block-Max-WAND top-k query.
 

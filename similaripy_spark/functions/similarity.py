@@ -1,48 +1,69 @@
 """The generalized top-k sparse similarity kernel, Spark-first.
 
 The reference implements ONE kernel — ``s_plus`` (similaripy/cython_code/
-s_plus.h:265-453: row-parallel Gustavson SpGEMM into a sparse accumulator,
-drained through a normalization/shrink/threshold expression into a size-k
-heap) — and parameterizes it into nine public similarity functions
-(similaripy/similarity.py:9-592). This module does the same with one logical
-plan:
+s_plus.h:71-240: row-parallel Gustavson SpGEMM into a sparse accumulator
+(SPA), drained through a normalization/shrink/threshold expression into a
+size-k heap) — and parameterizes it into nine public similarity functions
+(similaripy/similarity.py:9-592). This module does the same with one
+row-partitioned Arrow kernel:
 
-    m1(row, j, v1)  ⋈  m2(j, col, v2)        -- hash join on the shared dim
-      → groupBy(row, col).sum(v1*v2)          -- Tungsten hash-agg == the SPA
-      → join per-row / per-col statistics     -- the precomputed norm vectors
-      → scalar similarity expression           -- s_plus.h:129-156, verbatim
-      → filter(value >= threshold, value!=0)  -- s_plus.h:205-207 + output
-                                                  eliminate_zeros (s_plus.pyx:424)
-      → windowed top-k                         -- s_plus.h:39-64 heap
+    m2 (m1ᵀ for self-similarity)
+      → collected once on the driver as Arrow, max_df-capped, per-col
+        statistics taken, column selectors applied, laid out as CSR keyed
+        by the shared dimension               -- the reference's in-memory m2
+      → shipped as a Spark broadcast
+    m1 (+ tagged mask / population rows)
+      → repartitioned by row                  -- the OpenMP row loop
+      → mapInArrow, per task:
+          expand each row's pairs against the CSR
+          accumulate the (row, col) cells       -- the SPA (sort-based)
+          scalar similarity expression          -- s_plus.h:129-156
+          value >= threshold, value != 0        -- s_plus.h:205-207 + output
+                                                   eliminate_zeros (s_plus.pyx:424)
+          per-row top-k                         -- s_plus.h:39-64 heap
 
-Catalyst supplies what the reference hand-codes: the shuffle replaces the
-OpenMP row loop, AQE picks broadcast vs sort-merge joins and splits skewed
-partitions (the reference's popularity column-reorder, s_plus_utils.pyx:493-
-618, is a cache-locality/skew tactic with no Spark analog needed), and
-map-side partial aggregation is the blocked accumulator.
+A row is complete in its partition, so the top-k needs no exchange after
+the kernel, and only matrix entries cross the JVM↔Python boundary — the
+pair stream (quadratic in posting lengths, the only truly large relation
+here) never leaves the task that produces it.
 
-Scale notes (100 TB / 10^12-doc thinking):
-* the (row, col) aggregate is the only big shuffle; everything else joins
-  small per-key aggregates that AQE broadcast-converts at runtime;
-* per-row selector masks (target/filter cols as matrices) are semi/anti
-  joins on (row, col) — no driver-side materialization anywhere;
-* array-form column selectors become ``isin`` predicates on m2 *before* the
-  join, so Catalyst pushes them into the scan (mirrors the reference's
-  Python-side pre-filter, s_plus_utils.pyx:424-490).
+Scale notes:
+* the m2 side is bounded by the broadcast budget
+  (``spark.sql.autoBroadcastJoinThreshold``); a larger m2 is split into
+  the fewest column blocks under it, each block runs the same kernel, and
+  the per-block top-k sets merge through ``operators.topk.top_k`` (the
+  global top-k is a subset of their union: the order is total);
+* a task's pair arena is bounded: rows are taken in whole-row chunks of
+  about ``_PAIR_BUDGET`` pairs, so a skewed partition costs time, not
+  memory;
+* per-row selector masks and DataFrame populations ride the same row
+  exchange as tagged rows, the way docvalues sentinel rows ride
+  ``segment_topk`` — no join anywhere in the plan.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterable, Optional, Union
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from similaripy_spark.matrix import binarize, eliminate_zeros, transpose
+from similaripy_spark.matrix import as_matrix, eliminate_zeros, transpose
 from similaripy_spark.functions.normalization import normalize as _normalize
 from similaripy_spark.operators.topk import top_k
 
 Selector = Union[None, Iterable[int], DataFrame]
+
+# pairs expanded per accumulator chunk (whole rows; one row may exceed it)
+_PAIR_BUDGET = 1 << 17
+
+# kernel input row tags: m1 entries, per-row target/filter mask cells,
+# DataFrame pop1 weights
+_ENTRY, _TARGET, _FILTER, _POP1 = 0, 1, 2, 3
+
+_OUT_SCHEMA = "row long, col long, value double"
 
 
 def _shrink_values(shrink: float, shrink_type: str) -> tuple[float, float, float]:
@@ -58,13 +79,282 @@ def _shrink_values(shrink: float, shrink_type: str) -> tuple[float, float, float
     )
 
 
-def _as_id_df(m1: DataFrame, sel, colname: str) -> DataFrame:
-    """Normalize a python iterable / 1-col DataFrame selector to a DataFrame."""
+def _as_ids(sel) -> np.ndarray:
+    """A python iterable / 1-col DataFrame column selector → id array."""
     if isinstance(sel, DataFrame):
-        return sel.select(F.col(sel.columns[0]).cast("long").alias(colname)).distinct()
-    spark = m1.sparkSession
-    vals = [(int(x),) for x in sel]
-    return spark.createDataFrame(vals, f"{colname} long").distinct()
+        t = sel.select(F.col(sel.columns[0]).cast("long")).toArrow()
+        return t.column(0).to_numpy()
+    return np.asarray([int(x) for x in sel], dtype=np.int64)
+
+
+def _is_matrix(sel) -> bool:
+    return isinstance(sel, DataFrame) and len(sel.columns) >= 2
+
+
+def _cell_order(row: np.ndarray, col: np.ndarray, name: str) -> np.ndarray:
+    """Sort order by (row, col), asserting the kernel's input invariant:
+    one stored value per cell. The reference sums duplicates when it
+    builds CSR from COO; summing them here instead would give
+    xsq = Σv² per entry, not (Σv)²."""
+    o = np.lexsort((col, row))
+    r, c = row[o], col[o]
+    d = np.flatnonzero((r[1:] == r[:-1]) & (c[1:] == c[:-1]))
+    if d.size:
+        raise ValueError(
+            f"duplicate (row, col) cell in {name}: ({r[d[0]]}, {c[d[0]]})"
+        )
+    return o
+
+
+def _m2_blocks(j, col, v2, *, hot, ys, keep_col, col_ids, budget):
+    """CSR blocks of m2 keyed by the shared dimension ``j``, split over the
+    kept output columns into the fewest blocks whose size stays within
+    ``budget`` bytes (``budget <= 0``: one block). ``ys``: per-col
+    statistics aligned with ``col_ids``."""
+    code = np.cumsum(keep_col) - 1  # old col code → kept col code
+    cc = np.searchsorted(col_ids, col)
+    live = keep_col[cc]
+    j, cc, v2 = j[live], code[cc[live]], v2[live]
+    col_ids = col_ids[keep_col]
+    ys = {name: a[keep_col] for name, a in ys.items()}
+
+    n_col = len(col_ids)
+    # bytes: 16 per entry (int64 code + float64 value), 24 per column
+    # (its id + statistics)
+    per_col = 16 * np.bincount(cc, minlength=n_col) + 24
+    bounds = [0]
+    if budget > 0:
+        acc = 0
+        for c, b in enumerate(per_col.tolist()):
+            if acc and acc + b > budget:
+                bounds.append(c)
+                acc = 0
+            acc += b
+    bounds.append(n_col)
+
+    o = np.lexsort((cc, j))
+    j, cc, v2 = j[o], cc[o], v2[o]
+    blocks = []
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        sel = (cc >= lo) & (cc < hi)
+        bj = j[sel]
+        jids, start = np.unique(bj, return_index=True)
+        blocks.append({
+            "hot": hot,
+            "jids": jids,
+            "indptr": np.append(start, len(bj)).astype(np.int64),
+            "cc": cc[sel] - lo,
+            "v2": v2[sel],
+            "col_ids": col_ids[lo:hi],
+            "ys": {name: a[lo:hi] for name, a in ys.items()},
+        })
+    return blocks
+
+
+def _pow(x, e: float) -> np.ndarray:
+    """``x ** e`` per element through the C library's pow — the rounding
+    Spark's and SQL engines' POW give. numpy's vectorized (SIMD) power
+    differs in the last bit, which turns exact ties such as a/√b vs
+    2a/√(4b) into arbitrary orders."""
+    with np.errstate(all="ignore"):
+        return np.array([np.float64(v) ** e for v in np.asarray(x).tolist()],
+                        dtype=np.float64)
+
+
+def _stats(code, v, n, sp, side: str, dep=None) -> dict:
+    """Per-key statistics of one side (``side`` 'x': m1 rows, c1/p1; 'y':
+    m2 cols, c2/p2): squared norm ``sq``, its cosine factor
+    ``pw = (sq + h_add)^c`` and the depop weight ``dep = w^p``, where w is
+    Σv for a 'sum' population or the given per-key array."""
+    c, p, pop = (sp["c1"], sp["p1"], sp["pop1"]) if side == "x" else (
+        sp["c2"], sp["p2"], sp["pop2"])
+    out = {}
+    if sp["l1"] != 0.0 or sp["l2"] != 0.0:
+        out["sq"] = np.bincount(code, v * v, minlength=n)
+    if sp["l2"] != 0.0:
+        out["pw"] = _pow(out["sq"] + sp["h_add"], c)
+    if pop == "sum":
+        out["dep"] = _pow(np.bincount(code, v, minlength=n), p)
+    elif dep is not None:
+        out["dep"] = _pow(dep, p)
+    return out
+
+
+def _similarity(xy, xs, ys, sp) -> np.ndarray:
+    """The s_plus.h:129-156 expression, term for term in float64, over
+    per-cell gathers of the row (``xs``) and col (``ys``) statistics."""
+    num = _pow(xy, sp["alpha"]) if sp["alpha"] != 1.0 else xy
+    terms = []
+    if sp["l1"] != 0.0:
+        terms.append(sp["l1"] * (sp["t1"] * (xs["sq"] - xy)
+                                 + sp["t2"] * (ys["sq"] - xy) + xy))
+    if sp["l2"] != 0.0:
+        terms.append(sp["l2"] * xs["pw"] * ys["pw"])
+    if sp["l3"] != 0.0:
+        terms.append(sp["l3"] * xs.get("dep", 1.0) * ys.get("dep", 1.0))
+    if not (terms or sp["h_stab"] != 0.0 or sp["h_bayes"] != 0.0):
+        # no normalization at all → raw xy, alpha ignored (s_plus.h:131, 142-156)
+        return xy
+    denom = sp["h_stab"]
+    for t in terms:
+        denom = denom + t
+    with np.errstate(divide="ignore", invalid="ignore"):
+        val = np.where(denom != 0.0, num / denom, 0.0)
+        if sp["h_bayes"] != 0.0:
+            val = val * (num / (num + sp["h_bayes"]))
+    return val
+
+
+def _topk_order(rows, cols, val, k, tie_round):
+    """Indices of the per-row top-k by ``value DESC, col ASC`` on the
+    ``tie_round``-quantized key — ``operators.topk.top_k``'s order,
+    including Spark's NaN-greatest and floor-to-long semantics."""
+    q = val
+    if tie_round is not None:
+        q = np.floor(val * float(10**tie_round) + 0.5)
+        q = np.nan_to_num(np.clip(q, -(2.0**63), 2.0**63), nan=0.0)
+    o = np.lexsort((cols, -q, ~np.isnan(q), rows))
+    r = rows[o]
+    first = np.r_[True, r[1:] != r[:-1]]
+    idx = np.arange(len(o))
+    rank = idx - np.maximum.accumulate(np.where(first, idx, 0))
+    return o[rank < k]
+
+
+def _spa_topk(row, col, val, tag, m2, sp):
+    """One partition's rows (every entry of each row present) → per-row
+    top-k (row, col, value) arrays, one tuple per chunk of whole rows."""
+    e = tag == _ENTRY
+    r1, j1, v1 = row[e], col[e], val[e]
+    o = _cell_order(r1, j1, "m1")
+    r1, j1, v1 = r1[o], j1[o], v1[o]
+    if len(m2["hot"]):
+        keep = ~np.isin(j1, m2["hot"])
+        r1, j1, v1 = r1[keep], j1[keep], v1[keep]
+    jids, indptr = m2["jids"], m2["indptr"]
+    if not (len(r1) and len(jids)):
+        return
+    rows, ri = np.unique(r1, return_inverse=True)
+    n = len(rows)
+
+    # per-row statistics over the full (capped) rows; rows absent from a
+    # DataFrame pop1 drop out
+    live = np.ones(n, dtype=bool)
+    dep = None
+    if sp["pop1"] == "df":
+        p = tag == _POP1
+        live, dep = _lookup(row[p], val[p], rows)
+    xs = _stats(ri, v1, n, sp, "x", dep)
+
+    # m1 entries → CSR rows of m2 (entries with no m2 partner visit nothing)
+    pos = np.minimum(np.searchsorted(jids, j1), len(jids) - 1)
+    hit = (jids[pos] == j1) & live[ri]
+    ri, jc, v1 = ri[hit], pos[hit], v1[hit]
+    lens = indptr[jc + 1] - indptr[jc]
+
+    n_col = len(m2["col_ids"])
+
+    def mask_keys(t):
+        s = tag == t
+        mr, mc = row[s], col[s]
+        rp = np.minimum(np.searchsorted(rows, mr), n - 1)
+        cp = np.minimum(np.searchsorted(m2["col_ids"], mc), n_col - 1)
+        ok = (rows[rp] == mr) & (m2["col_ids"][cp] == mc)
+        return np.unique(rp[ok] * n_col + cp[ok])
+
+    target = mask_keys(_TARGET) if sp["target"] else None
+    filt = mask_keys(_FILTER) if sp["filter"] else None
+
+    # chunks of whole rows, each expanding about pair_budget pairs
+    cum = np.cumsum(np.bincount(ri, lens, minlength=n))
+    row_lo = 0
+    while row_lo < n:
+        base = cum[row_lo - 1] if row_lo else 0.0
+        row_hi = max(int(np.searchsorted(cum, base + sp["pair_budget"], "right")),
+                     row_lo + 1)
+        a, b = np.searchsorted(ri, [row_lo, row_hi])
+        row_lo = row_hi
+        L = lens[a:b]
+        total = int(L.sum())
+        if total == 0:
+            continue
+        seg = np.repeat(np.cumsum(L) - L, L)
+        p = np.repeat(indptr[jc[a:b]], L) + (np.arange(total) - seg)
+        key = np.repeat(ri[a:b], L) * n_col + m2["cc"][p]
+        w = np.repeat(v1[a:b], L) * m2["v2"][p]
+        cells, inv = np.unique(key, return_inverse=True)
+        xy = np.bincount(inv, w, minlength=len(cells))
+        if target is not None:
+            keep = np.isin(cells, target, assume_unique=True)
+            cells, xy = cells[keep], xy[keep]
+        if filt is not None:
+            keep = ~np.isin(cells, filt, assume_unique=True)
+            cells, xy = cells[keep], xy[keep]
+        cr, cc = np.divmod(cells, n_col)
+        value = _similarity(
+            xy,
+            {name: st[cr] for name, st in xs.items()},
+            {name: st[cc] for name, st in m2["ys"].items()},
+            sp,
+        )
+        # threshold (s_plus.h:205-207) then drop exact zeros (s_plus.pyx:424);
+        # NaN passes, as in Spark's ordering
+        keep = ((value >= sp["threshold"]) | np.isnan(value)) & (value != 0.0)
+        cr, cc, value = cr[keep], cc[keep], value[keep]
+        top = _topk_order(cr, cc, value, sp["k"], sp["tie_round"])
+        yield rows[cr[top]], m2["col_ids"][cc[top]], value[top]
+
+
+def _spa_kernel(bc, sp):
+    """mapInArrow kernel over one row partition of the tagged m1 rows."""
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        batches = list(batches)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        row, col, val, tag = (
+            t.column(c).to_numpy() for c in ("row", "col", "value", "tag")
+        )
+        for r, c, v in _spa_topk(row, col, val, tag, bc.value, sp):
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(r), pa.array(c), pa.array(v)],
+                names=["row", "col", "value"],
+            )
+
+    return kernel
+
+
+def _tagged(df: DataFrame, tag: int) -> DataFrame:
+    """A (row, col) selector matrix, or a (row, w) population, as kernel
+    input rows."""
+    a, b = (F.col(c) for c in df.columns[:2])
+    if tag == _POP1:
+        col, value = F.lit(0).cast("long"), b.cast("double")
+    else:
+        col, value = b.cast("long"), F.lit(0.0)
+    return df.select(a.cast("long").alias("row"), col.alias("col"),
+                     value.alias("value"), F.lit(tag).alias("tag"))
+
+
+def _collect_pop(pop: DataFrame):
+    """DataFrame(id, w) population → (ids, w) arrays."""
+    t = pop.select(
+        F.col(pop.columns[0]).cast("long"), F.col(pop.columns[1]).cast("double")
+    ).toArrow()
+    return t.column(0).to_numpy(), t.column(1).to_numpy()
+
+
+def _lookup(ids, w, keys):
+    """Population weights of the sorted ``keys`` → (present, w)."""
+    if not len(ids):
+        return np.zeros(len(keys), dtype=bool), np.zeros(len(keys))
+    o = np.argsort(ids, kind="stable")
+    ids, w = ids[o], w[o]
+    pos = np.minimum(np.searchsorted(ids, keys), len(ids) - 1)
+    return ids[pos] == keys, w[pos]
 
 
 def s_plus(
@@ -110,8 +400,10 @@ def s_plus(
         val   = num/denom (0 if denom == 0); bayesian: val *= num/(num+h_bayes)
 
     ``pop1``/``pop2``: 'none' | 'sum' | DataFrame(id, w) custom weights
-    (s_plus_utils.pyx:231-278). Selector semantics per s_plus.pyx:190-196,
-    276-295 and s_plus.h:159-188.
+    (s_plus_utils.pyx:231-278); ids absent from a DataFrame population drop
+    out of the result. Selector semantics per s_plus.pyx:190-196, 276-295
+    and s_plus.h:159-188. Only visited cells (xy computed from at least one
+    shared dimension) are candidates.
 
     ``max_df``: optional hot-dimension cap — shared dimensions with more
     than max_df m2 entries are dropped from both matrices before anything
@@ -123,6 +415,12 @@ def s_plus(
     (similarity.py:519-520); ``p1``/``p2`` are accepted as aliases (the
     kernel-level names, s_plus.pyx:118-119).
 
+    Eager part: the m2 side (m2, or m1ᵀ for self-similarity) and any
+    DataFrame ``pop2`` / column selector are collected to the driver when
+    ``s_plus`` is called (as ``ann``'s blocked GEMM counts its input), and a
+    duplicate (row, col) cell there raises ``ValueError``; the same check
+    runs on m1 inside the kernel. The m1 side stays lazy.
+
     Returns matrix DataFrame (row, col, value) with per-row top-k.
     """
     if p1 is not None:
@@ -131,268 +429,107 @@ def s_plus(
         beta2 = p2
     p1, p2 = float(beta1), float(beta2)
     h_stab, h_bayes, h_add = _shrink_values(shrink, shrink_type)
-
-    m1 = eliminate_zeros(m1.select("row", "col", "value"))
-    self_sim = m2 is None
-    if not self_sim:
-        m2 = eliminate_zeros(m2.select("row", "col", "value"))
-
-    if binary:  # s_plus_utils.pyx:281-308
-        m1 = m1.withColumn("value", F.lit(1.0))
-        if not self_sim:
-            m2 = m2.withColumn("value", F.lit(1.0))
-
-    if max_df is not None:
-        # Hot-dimension mitigation: drop shared dimensions whose m2 posting
-        # count exceeds max_df from BOTH matrices up front. A hot dimension
-        # (stopword column) contributes |postings|² output pairs — an
-        # intrinsic blow-up that no shuffle-level skew handling (AQE,
-        # salting) can reduce; df-capping is the standard approximation
-        # (the Spark-era analog of the reference's popularity machinery,
-        # s_plus_utils.pyx:493-618, which reorders hot columns for
-        # locality). Semantics: identical to running s_plus on the
-        # pre-filtered matrices — norms and populations see the filtered
-        # data. The hot set is tiny by construction → broadcast anti-joins.
-        hot = (
-            (transpose(m1) if self_sim else m2)
-            .groupBy("row")
-            .agg(F.count("*").alias("_dimdf"))
-            .filter(F.col("_dimdf") > int(max_df))
-            .select("row")
-        )
-        m1 = m1.join(
-            F.broadcast(hot.select(F.col("row").alias("col"))),
-            "col",
-            "left_anti",
-        )
-        if not self_sim:
-            m2 = m2.join(F.broadcast(hot), "row", "left_anti")
-
-    # --- row/col statistics BEFORE any selector pruning (the reference
-    # builds norm vectors from the full matrices: s_plus.pyx:227-273) ------
-    #
-    # Round-6 plan shape (optimization guide §2.3/§2.4): every per-row /
-    # per-col statistic (squared norms, 'sum' populations) is a WINDOW
-    # column computed on the join inputs themselves, not a separate
-    # aggregate subtree joined back after the product aggregate:
-    #   * the row-keyed window requires hashpartitioning(row), so the
-    #     streamed side of the SpGEMM join arrives clustered by `row`; the
-    #     (row, col) product aggregate AND the final top-k window then both
-    #     satisfy their distribution from that same single exchange — the
-    #     pair stream (quadratic in posting lengths, the only truly large
-    #     relation here) never crosses a shuffle while m2 rides in as a
-    #     broadcast, and a hot shared dimension is spread across row
-    #     partitions instead of landing in one (skew-immune by layout);
-    #   * self-similarity derives BOTH join sides from one stats-annotated
-    #     base plan (ysq(m1ᵀ) ≡ xsq(m1)), so the scan + stats exchange run
-    #     once (AQE reuses the shuffle stage for the broadcast side);
-    #   * statistics ride through the product aggregate via max(): every
-    #     contribution to an output cell shares the same row (resp. col),
-    #     so max() reproduces the exact per-key value — no float change.
-    need_sq = l1 != 0.0 or l2 != 0.0
-    row_w = Window.partitionBy("row")
-    v = F.col("value")
-
-    # The row clustering is installed with an EXPLICIT partition count (the
-    # session's configured shuffle parallelism — the standard deployment-
-    # sized knob): an ENSURE_REQUIREMENTS exchange here would be AQE-
-    # coalesced by its own (small, pre-join) byte size, and the downstream
-    # SpGEMM multiplies volume by the posting-length factor — a Zipf corpus
-    # measured 14 s → 98 s when the pair stream aggregated+sorted in the
-    # handful of partitions AQE sized for the pre-join bytes. Partition
-    # count must be sized for the POST-join volume, which only the
-    # configured parallelism knows about (guide §2.5 input-skew note).
-    n_part = int(
-        m1.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-
     if l3 != 0.0:  # s_plus_utils.pyx:231-278
         if not isinstance(pop1, DataFrame) and pop1 not in ("none", "sum"):
             raise ValueError(f"invalid pop1: {pop1!r}")
         if not isinstance(pop2, DataFrame) and pop2 not in ("none", "sum"):
             raise ValueError(f"invalid pop2: {pop2!r}")
-    need_xdep = l3 != 0.0 and (isinstance(pop1, DataFrame) or pop1 == "sum")
-    need_ydep = l3 != 0.0 and (isinstance(pop2, DataFrame) or pop2 == "sum")
 
-    def _pop_df(pop, key: str, expo: float, out: str) -> DataFrame:
-        return pop.select(
-            F.col(pop.columns[0]).cast("long").alias(key),
-            F.pow(F.col(pop.columns[1]).cast("double"), F.lit(expo)).alias(out),
-        )
+    def pop_mode(pop):
+        if l3 == 0.0:
+            return "none"
+        return "df" if isinstance(pop, DataFrame) else pop
 
-    left_stats: list[str] = []
-    right_stats: list[str] = []
-    if self_sim:
-        # ONE shared base: xsq ≡ ysq and the row-sum population serves both
-        # exponents; the transposed side is a pure projection of this plan.
-        base = m1.repartition(n_part, F.col("row"))
-        if need_sq:
-            base = base.withColumn("_nsq", F.sum(v * v).over(row_w))
-        sum_xdep = need_xdep and not isinstance(pop1, DataFrame)
-        sum_ydep = need_ydep and not isinstance(pop2, DataFrame)
-        if sum_xdep or sum_ydep:
-            base = base.withColumn("_rsum", F.sum(v).over(row_w))
-        left = base
-        if need_sq:
-            left = left.withColumn("_xsq", F.col("_nsq"))
-            left_stats.append("_xsq")
-        if sum_xdep:
-            left = left.withColumn("_xdep", F.pow(F.col("_rsum"), F.lit(p1)))
-            left_stats.append("_xdep")
-        # the transposed side: a pure projection of the SAME base plan
-        # (stats transpose with it: ysq ≡ nsq and the m2-col population is
-        # keyed by base.row, both already in hand)
-        tsel = [
-            F.col("col").alias("row"),
-            F.col("row").alias("col"),
-            F.col("value"),
-        ]
-        if need_sq:
-            tsel.append(F.col("_nsq").alias("_ysq"))
-            right_stats.append("_ysq")
-        if sum_ydep:
-            tsel.append(F.pow(F.col("_rsum"), F.lit(p2)).alias("_ydep"))
-            right_stats.append("_ydep")
-        right = base.select(*tsel)
-    else:
-        left, right = m1.repartition(n_part, F.col("row")), m2
-        if need_sq:
-            left = left.withColumn("_xsq", F.sum(v * v).over(row_w))
-            right = right.withColumn(
-                "_ysq", F.sum(v * v).over(Window.partitionBy("col"))
-            )
-            left_stats.append("_xsq")
-            right_stats.append("_ysq")
-        if need_xdep and not isinstance(pop1, DataFrame):  # 'sum'
-            left = left.withColumn(
-                "_xdep", F.pow(F.sum(v).over(row_w), F.lit(p1))
-            )
-            left_stats.append("_xdep")
-        if need_ydep and not isinstance(pop2, DataFrame):  # 'sum'
-            right = right.withColumn(
-                "_ydep",
-                F.pow(F.sum(v).over(Window.partitionBy("col")), F.lit(p2)),
-            )
-            right_stats.append("_ydep")
-
-    # --- selector pruning (pushed before the join wherever the reference
-    # pre-filters in Python: s_plus.pyx:190-196, 287-295); row/col pruning
-    # sits ABOVE the stats windows, so norms still see the full matrices --
-    if target_rows is not None:
-        tr = _as_id_df(m1, target_rows, "row")
-        left = left.join(F.broadcast(tr), "row", "left_semi")
-
-    tc_matrix = fc_matrix = None
-    if target_cols is not None:
-        if isinstance(target_cols, DataFrame) and len(target_cols.columns) >= 2:
-            tc_matrix = target_cols.select(
-                F.col(target_cols.columns[0]).cast("long").alias("row"),
-                F.col(target_cols.columns[1]).cast("long").alias("col"),
-            )
-        else:
-            tc = _as_id_df(m1, target_cols, "col")
-            right = right.join(F.broadcast(tc), "col", "left_semi")
-    if filter_cols is not None:
-        if isinstance(filter_cols, DataFrame) and len(filter_cols.columns) >= 2:
-            fc_matrix = filter_cols.select(
-                F.col(filter_cols.columns[0]).cast("long").alias("row"),
-                F.col(filter_cols.columns[1]).cast("long").alias("col"),
-            )
-        else:
-            fc = _as_id_df(m1, filter_cols, "col")
-            right = right.join(F.broadcast(fc), "col", "left_anti")
-
-    # --- the SpGEMM: join on the shared dimension + hash aggregate --------
-    jl = left.select(
-        F.col("row"), F.col("col").alias("_j"), F.col("value").alias("_v1"),
-        *left_stats,
-    )
-    jr = right.select(
-        F.col("row").alias("_j"), F.col("col"), F.col("value").alias("_v2"),
-        *right_stats,
-    )
-    carried = left_stats + right_stats
-    xy = (
-        jl.join(jr, "_j")
-        .groupBy("row", "col")
-        .agg(
-            F.sum(F.col("_v1") * F.col("_v2")).alias("_xy"),
-            *[F.max(c).alias(c) for c in carried],
-        )
+    sp = dict(
+        l1=float(l1), l2=float(l2), l3=float(l3), t1=float(t1), t2=float(t2),
+        c1=float(c1), c2=float(c2), p1=p1, p2=p2, alpha=float(alpha),
+        h_stab=h_stab, h_bayes=h_bayes, h_add=h_add,
+        pop1=pop_mode(pop1), pop2=pop_mode(pop2),
+        target=_is_matrix(target_cols), filter=_is_matrix(filter_cols),
+        threshold=float(threshold), k=int(k), tie_round=tie_round,
+        pair_budget=_PAIR_BUDGET,
     )
 
-    # per-row (row,col) masks apply on output cells before top-k
-    # (s_plus.h:159-188 binary-searches the mask per candidate)
-    if tc_matrix is not None:
-        xy = xy.join(tc_matrix, ["row", "col"], "left_semi")
-    if fc_matrix is not None:
-        xy = xy.join(fc_matrix, ["row", "col"], "left_anti")
+    m1 = eliminate_zeros(as_matrix(m1))
+    self_sim = m2 is None
+    m2 = m1 if self_sim else eliminate_zeros(as_matrix(m2))
+    if binary:  # s_plus_utils.pyx:281-308
+        m1 = m1.withColumn("value", F.lit(1.0))
+        m2 = m2.withColumn("value", F.lit(1.0))
 
-    # DataFrame-form populations attach here, after the aggregate: they are
-    # per-key relations the planner broadcast-joins against the (already
-    # top-k-bound-free but much thinner than the join output) cell stream —
-    # attaching them to the join inputs instead was measured SLOWER because
-    # it forces extra exchanges below the broadcast build (round 6).
-    scored = xy
-    if need_xdep and isinstance(pop1, DataFrame):
-        scored = scored.join(_pop_df(pop1, "row", p1, "_xdep"), "row")
-    if need_ydep and isinstance(pop2, DataFrame):
-        scored = scored.join(_pop_df(pop2, "col", p2, "_ydep"), "col")
-    xdepop = "_xdep" if need_xdep else None
-    ydepop = "_ydep" if need_ydep else None
+    # --- the m2 side, collected once: (j, col, v2) ------------------------
+    t = m2.toArrow()
+    a_row, a_col, v2 = (t.column(c).to_numpy() for c in ("row", "col", "value"))
+    _cell_order(a_row, a_col, "m1" if self_sim else "m2")
+    j, col = (a_col, a_row) if self_sim else (a_row, a_col)
 
-    # --- the similarity expression (s_plus.h:129-156) ---------------------
-    xy_c = F.col("_xy")
-    num = F.pow(xy_c, F.lit(alpha)) if alpha != 1.0 else xy_c
-    terms = []
-    if l1 != 0.0:
-        terms.append(
-            F.lit(l1)
-            * (
-                F.lit(t1) * (F.col("_xsq") - xy_c)
-                + F.lit(t2) * (F.col("_ysq") - xy_c)
-                + xy_c
-            )
-        )
-    if l2 != 0.0:
-        terms.append(
-            F.lit(l2)
-            * F.pow(F.col("_xsq") + F.lit(h_add), F.lit(c1))
-            * F.pow(F.col("_ysq") + F.lit(h_add), F.lit(c2))
-        )
-    if l3 != 0.0:
-        xd = F.col("_xdep") if xdepop is not None else F.lit(1.0)
-        yd = F.col("_ydep") if ydepop is not None else F.lit(1.0)
-        terms.append(F.lit(l3) * xd * yd)
+    # max_df → statistics → selectors, in that order: hot dimensions leave
+    # both sides before any norm or population is taken. A hot dimension
+    # contributes |postings|² pairs — the standard approximation is to cap
+    # it (the Spark-era analog of the reference's popularity machinery,
+    # s_plus_utils.pyx:493-618); semantics are those of s_plus on the
+    # pre-filtered matrices.
+    hot = np.empty(0, dtype=np.int64)
+    if max_df is not None:
+        ids, df = np.unique(j, return_counts=True)
+        hot = ids[df > int(max_df)]
+        keep = ~np.isin(j, hot)
+        j, col, v2 = j[keep], col[keep], v2[keep]
 
-    if terms or h_stab != 0.0 or h_bayes != 0.0:
-        denom = F.lit(h_stab)
-        for t in terms:
-            denom = denom + t
-        val = F.when(denom != 0.0, num / denom).otherwise(F.lit(0.0))
-        if h_bayes != 0.0:
-            val = val * (num / (num + F.lit(h_bayes)))
-    else:
-        # no normalization at all → raw xy, alpha ignored (s_plus.h:131, 142-156)
-        val = xy_c
+    # per-col statistics from the full (capped) m2: s_plus.pyx:227-273;
+    # cols absent from a DataFrame pop2 drop out
+    col_ids, cc = np.unique(col, return_inverse=True)
+    keep_col = np.ones(len(col_ids), dtype=bool)
+    dep = None
+    if sp["pop2"] == "df":
+        keep_col, dep = _lookup(*_collect_pop(pop2), col_ids)
+    ys = _stats(cc, v2, len(col_ids), sp, "y", dep)
 
-    scored = scored.select("row", "col", val.alias("value"))
+    # array-form column selectors prune the CSR (the reference pre-filters
+    # in Python: s_plus.pyx:190-196, 287-295); norms above saw every column
+    if target_cols is not None and not _is_matrix(target_cols):
+        keep_col &= np.isin(col_ids, _as_ids(target_cols))
+    if filter_cols is not None and not _is_matrix(filter_cols):
+        keep_col &= ~np.isin(col_ids, _as_ids(filter_cols))
 
-    # threshold (s_plus.h:205-207) then drop exact zeros (s_plus.pyx:424)
-    scored = scored.filter(
-        (F.col("value") >= F.lit(float(threshold))) & (F.col("value") != 0.0)
-    )
+    spark = m1.sparkSession
+    budget = int(spark._jsparkSession.sessionState().conf()
+                 .autoBroadcastJoinThreshold())
+    blocks = _m2_blocks(j, col, v2, hot=hot, ys=ys, keep_col=keep_col,
+                        col_ids=col_ids, budget=budget)
 
-    return top_k(scored, k, tie_round=tie_round)
+    # --- the m1 side: entries + tagged mask / population rows -------------
+    x = m1.select("row", "col", "value", F.lit(_ENTRY).alias("tag"))
+    if _is_matrix(target_cols):
+        x = x.union(_tagged(target_cols, _TARGET))
+    if _is_matrix(filter_cols):
+        x = x.union(_tagged(filter_cols, _FILTER))
+    if sp["pop1"] == "df":
+        x = x.union(_tagged(pop1, _POP1))
+    if isinstance(target_rows, DataFrame):
+        tr = target_rows.select(
+            F.col(target_rows.columns[0]).cast("long").alias("row"))
+        x = x.join(F.broadcast(tr), "row", "left_semi")
+    elif target_rows is not None:
+        x = x.filter(F.col("row").isin([int(r) for r in target_rows]))
+    # EXPLICIT partition count (the configured shuffle parallelism): an
+    # ENSURE_REQUIREMENTS exchange would be AQE-coalesced by the small
+    # entry bytes, while each task's work is the pairs its rows expand to.
+    # A row-clustered input (same key, same count) elides it.
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    x = x.repartition(n_part, F.col("row"))
+    sc = spark.sparkContext
+    outs = [x.mapInArrow(_spa_kernel(sc.broadcast(b), sp), _OUT_SCHEMA)
+            for b in blocks]
+    if len(outs) == 1:
+        return outs[0]
+    return top_k(reduce(DataFrame.union, outs), k, tie_round=tie_round)
 
 
 # ---------------------------------------------------------------------------
 # The nine public similarity functions = s_plus parameterizations, matching
 # similarity.py:9-592 wrapper-for-wrapper.
 # ---------------------------------------------------------------------------
-
-_COMMON_DOC = dict()
-
 
 def dot_product(m1, m2=None, *, k=100, shrink=0.0, shrink_type="stabilized",
                 threshold=0.0, binary=False, target_rows=None,
@@ -475,11 +612,10 @@ def p3alpha(m1, m2=None, *, alpha=1.0, k=100, shrink=0.0,
     m1 = eliminate_zeros(m1.select("row", "col", "value"))
     # pin the row clustering BELOW the normalization window with an
     # explicit partition count: the window's own ENSURE_REQUIREMENTS
-    # exchange would be AQE-coalesced by its (small, pre-join) byte size,
-    # and everything downstream — the SpGEMM join probe, the product
-    # aggregate, the top-k window — inherits that partitioning (the
-    # kernel's later repartition elides as redundant). Same reasoning as
-    # the kernel-internal pin; see s_plus.
+    # exchange would be AQE-coalesced by its (small) byte size, and the
+    # kernel's row repartition (same key, same count) elides as redundant,
+    # so one exchange feeds both. Same reasoning as the kernel's own pin;
+    # see s_plus.
     m1 = m1.repartition(
         int(m1.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")),
         F.col("row"),

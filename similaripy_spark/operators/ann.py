@@ -2,8 +2,8 @@
 
 * ``embeddings_to_matrix``  — posexplode to the engine's long form; from
   there the whole s_plus similarity family applies to embeddings for free.
-* ``ann_bruteforce_topk``   — exact cosine top-k baseline (the s_plus cosine
-  kernel: join on dimension → hash-agg → norms → window top-k).
+* ``ann_bruteforce_topk``   — exact cosine top-k baseline (dense GEMM; the
+  sparse s_plus cosine kernel serves as its method='join' oracle).
 * ``ann_lsh_topk``          — random-hyperplane LSH buckets (deterministic
   sign patterns from an integer-hash plane matrix), exact cosine on the
   candidate pairs: a scale path. Recall vs brute force is measured in
@@ -91,9 +91,10 @@ def ann_bruteforce_topk(
     |Q|·n_index_blocks + |I|·n_query_blocks; nothing ever lands on the
     driver. This is the 100-TB path.
 
-    The relational path (method='join') joins on the dimension key, which
-    has only `dim` distinct values → a skewed blow-up; keep it for tiny
-    inputs or as an oracle.
+    The sparse path (method='join') runs the s_plus cosine kernel on the
+    long-form matrix; the shared dimension has only `dim` distinct values,
+    so every vector pair is expanded `dim` times — keep it for tiny inputs
+    or as an oracle.
     """
     if method == "join":
         m = embeddings_to_matrix(emb, id_col, vec_col)

@@ -52,11 +52,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
-        # 128 MB: the similarity kernel's whole no-shuffle-pair-stream plan
-        # hinges on the m2 side broadcasting; the default 10 MB (and the
-        # previous 64 MB) dropped it back to a sort-merge join one data-size
-        # step up. A ~10^2 MB broadcast is well inside executor budgets
-        # (guide §3.1); override per deployment via extra_conf.
+        # 128 MB: also the similarity kernel's m2 block budget — s_plus
+        # broadcasts m2 as CSR in the fewest column blocks under this size
+        # (one block below it). The default 10 MB would split a mid-sized
+        # m2 into blocks that each rescan m1. A ~10^2 MB broadcast is well
+        # inside executor budgets (guide §3.1); override per deployment via
+        # extra_conf.
         .config("spark.sql.autoBroadcastJoinThreshold", str(128 * 1024 * 1024))
         # let the planner pick shuffled-hash over sort-merge when its size
         # conditions hold (guide §3.1/§9): no sort of either side; every

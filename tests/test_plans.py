@@ -3,6 +3,7 @@ around must be visible in `.explain()` output (SURVEY.md §4)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
@@ -33,10 +34,19 @@ def li_matrix(spark):
     )
 
 
-def test_topk_uses_window_group_limit(spark, li_matrix):
-    """The deterministic top-k compiles to WindowGroupLimit — the
-    distributed equivalent of the reference's per-row heap (s_plus.h:39-64)."""
-    assert has_window_group_limit(sps.cosine(li_matrix, k=10))
+def test_topk_uses_window_group_limit(spark):
+    """The deterministic top-k (operators.topk.top_k, which bm25_topk
+    compiles) becomes WindowGroupLimit — the distributed equivalent of the
+    reference's per-row heap (s_plus.h:39-64)."""
+    from similaripy_spark.fulltext.postings import build_postings
+    from similaripy_spark.fulltext.query import bm25_topk
+    from similaripy_spark.fulltext.weights import bm25_weights
+
+    pages = spark.read.parquet(f"{SF}/documents.parquet").select(
+        "doc_id", F.col("text")
+    )
+    q = spark.createDataFrame([(1, ["a", "b"])], "query_id long, terms array<string>")
+    assert has_window_group_limit(bm25_topk(bm25_weights(build_postings(pages)), q))
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark):
@@ -77,13 +87,33 @@ def test_bm25_weights_uses_broadcasts(spark):
     assert count_exchanges(w) <= 3, physical_plan(w)
 
 
+def _above_first_exchange(plan: str) -> str:
+    """The plan text from the root down to the first (topmost) Exchange."""
+    return plan.split("Exchange", 1)[0]
+
+
 def test_s_plus_exchange_budget(spark, li_matrix):
-    """The s_plus plan's only big shuffle is the (row, col) aggregate; the
-    stats joins must not add full-relation exchanges beyond their own
-    aggregations. Budget pinned so accidental de-optimizations fail here."""
-    out = sps.cosine(li_matrix, k=10)
-    n = count_exchanges(out)
-    assert n <= 8, f"exchange count grew to {n}:\n{physical_plan(out)}"
+    """The similarity kernel adds exactly one exchange — the row
+    repartition feeding the Arrow SPA kernel — and nothing relational sits
+    above it: the pair stream, its (row, col) accumulation and the top-k
+    all live inside the kernel. cosine = the matrix's own aggregate + the
+    row exchange; rp3beta's row pin below its L1 window makes the kernel's
+    repartition elide, so it has the same count."""
+    cos = physical_plan(sps.cosine(li_matrix, k=10))
+    assert count_exchanges(sps.cosine(li_matrix, k=10)) == 2, cos
+    top = _above_first_exchange(cos)
+    assert "MapInArrow" in top, cos
+    for op in ("Join", "HashAggregate", "Window"):
+        assert op not in top, cos
+
+    rp3 = sps.rp3beta(li_matrix, k=10, tie_round=9)
+    plan = physical_plan(rp3)
+    assert count_exchanges(rp3) == 2, plan
+    top = _above_first_exchange(plan)
+    assert "MapInArrow" in top, plan
+    assert "Join" not in top and "HashAggregate" not in top, plan
+    # the only window is the L1 row normalization over the row pin
+    assert top.count("Window [") == 1, plan
 
 
 def test_matrix_weighting_skew_safe_plan_shapes(spark, li_matrix):
@@ -143,13 +173,30 @@ def test_jaccard_candidates_prune_before_aggregate(spark):
     assert not _re.search(r"doc_a#\d+L? < doc_b#", plan), plan
 
 
-def test_selector_pushdown_into_join(spark, li_matrix):
-    """Array-form filter_cols must prune m2 BEFORE the join (reference
-    pre-filters in Python: s_plus_utils.pyx:424-490); visible as a Filter
-    above the scan side, not a post-aggregation filter."""
-    out = sps.dot_product(li_matrix, k=5, filter_cols=list(range(50)))
-    plan = physical_plan(out)
-    assert "BroadcastHashJoin" in plan  # the anti-join of the selector
+def test_array_filter_cols_prune_broadcast_csr(spark, li_matrix, monkeypatch):
+    """Array-form filter_cols remove those columns from the broadcast m2
+    CSR before the kernel runs (the reference pre-filters in Python:
+    s_plus_utils.pyx:424-490) — no join or filter over the pair stream."""
+    from similaripy_spark.functions import similarity
+
+    seen = []
+    real = similarity._m2_blocks
+
+    def spy(*args, **kwargs):
+        blocks = real(*args, **kwargs)
+        seen.append(np.concatenate([b["col_ids"] for b in blocks]))
+        return blocks
+
+    monkeypatch.setattr(similarity, "_m2_blocks", spy)
+    excl = list(range(1, 50))
+    plain = sps.dot_product(li_matrix, k=5)
+    out = sps.dot_product(li_matrix, k=5, filter_cols=excl)
+    full, pruned = seen
+    assert np.isin(excl, full).any()
+    assert not np.isin(excl, pruned).any()
+    assert set(full) - set(excl) == set(pruned)
+    assert count_exchanges(out) == count_exchanges(plain)
+    assert "Join" not in physical_plan(out)
 
 
 def test_factored_build_plan_has_no_stats_join(spark):
